@@ -5515,14 +5515,14 @@ def _duck_pq_sql(
   SELECT vec_id,
          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                                   list(dq ORDER BY j)),
-                     (a, b) -> a + b) AS approx_d2
+                     (a, b) -> a + b) AS d2
   FROM lk GROUP BY vec_id)"""
     )
     return (
         "WITH " + ",\n".join(ctes)
         + f"""
-SELECT vec_id, round(approx_d2, 9) AS approx_d2 FROM sc
-ORDER BY approx_d2 ASC, vec_id ASC LIMIT {k}"""
+SELECT vec_id, round(d2, 9) AS approx_d2 FROM sc
+ORDER BY d2 ASC, vec_id ASC LIMIT {k}"""
     )
 
 
@@ -6821,7 +6821,7 @@ SELECT d.event_type, d.ws AS window_start, d.n AS n_events,
        d.med, mad.mad
 FROM dev d JOIN mad USING (event_type)
 WHERE d.dev > 3 * mad.mad""",
-        "crawl_delay": """
+        "crawl_delay": r"""
 WITH bodies AS (
   SELECT 'h' || CAST(doc_id % 16 AS VARCHAR) || '.test' AS host,
          CASE WHEN doc_id % 5 = 0

@@ -15,8 +15,8 @@ are orders of magnitude smaller than a crawl batch); the corpus-side
 cost is one token equi-join of the doc's DISTINCT tokens against the
 registry terms + one groupBy(query, conjunct, doc) count — only
 postings whose token appears in SOME query ever shuffle. The
-count-distinct==k conjunct test is the J1 intersection trick, so a
-k-term conjunct is one aggregate, not k joins.
+count-distinct==k conjunct test makes a k-term conjunct one
+aggregate, not k joins.
 """
 
 from __future__ import annotations

@@ -17,16 +17,17 @@ Reference semantics reproduced exactly (SURVEY.md §2 J1/J2/T2):
   * Query parse (F11, retrieve_query.py:89-111): whitespace split, 'AND'
     skipped (implicit), 'OR' flushes the conjunct, terms lowercased.
 
-Scale notes: each conjunct is one token-pruned scan (predicate
-`token IN (...)` pushes to parquet/Iceberg min-max stats thanks to the
-token-sorted index layout) + one groupBy(doc_id) — no cross joins, no
-collect. The k-term intersection is count-distinct==k, not k chained
-joins, so it's a single shuffle regardless of term count.
+Scale notes: every Boolean query (DNF, AND, AND-NOT) is ONE plan: one
+`token IN (<all terms>)` scan (pushed to parquet/Iceberg min-max stats by
+the token-sorted index layout), one groupBy(doc_id) pivoted to a
+presence-and-score column per term, and a CASE WHEN picking the first
+matching conjunct — one shuffle, no join, no window, whatever the query
+size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_LINKS_SHOWN = 5  # retrieve_query.py:14
@@ -48,40 +49,46 @@ def parse_query(query: str) -> list[list[str]]:
     return result
 
 
+def _boolean(
+    postings: DataFrame, conjuncts: list[list[str]], exclude: tuple[str, ...] = ()
+) -> DataFrame:
+    """Docs holding every term of some conjunct and no `exclude` term,
+    scored by the first matching conjunct's first term. The pivot gives
+    one column p<i> per distinct term: the max of struct(tf_idf) over the
+    doc's rows for that term, so it is null exactly when the
+    (doc_id, token) row is absent, whatever its tf_idf. A struct, not
+    the bare double, also keeps the pivot one aggregate: Spark splits an
+    atomic-typed pivot into two (a second shuffle). The CASE WHEN chain
+    is built from the generated names only, never from terms."""
+    conj = [list(dict.fromkeys(c)) for c in conjuncts if c]
+    if not conj:
+        return postings.select("doc_id", "tf_idf").limit(0)
+    terms = list(dict.fromkeys([t for c in conj for t in c] + list(exclude)))
+    p = {t: f"p{i}" for i, t in enumerate(terms)}
+    hit = [" AND ".join(f"{p[t]} IS NOT NULL" for t in c) for c in conj]
+    keep = " OR ".join(f"({h})" for h in hit)
+    keep = f"({keep})" + "".join(f" AND {p[t]} IS NULL" for t in exclude)
+    score = " ".join(f"WHEN {h} THEN {p[c[0]]}.tf_idf" for h, c in zip(hit, conj))
+    return (
+        postings.filter(F.col("token").isin(terms) & F.col("doc_id").isNotNull())
+        .groupBy("doc_id")
+        .pivot("token", terms)
+        .agg(F.max(F.struct("tf_idf")))
+        .toDF("doc_id", *p.values())
+        .filter(keep)
+        .selectExpr("doc_id", f"CASE {score} END AS tf_idf")
+    )
+
+
 def and_query(postings: DataFrame, terms: list[str]) -> DataFrame:
     """J1 — docs containing ALL terms; score = first term's tf_idf."""
-    if not terms:
-        return postings.select("doc_id", "tf_idf").limit(0)
-    uniq = list(dict.fromkeys(terms))
-    hits = (
-        postings.filter(F.col("token").isin(uniq))
-        .groupBy("doc_id")
-        .agg(F.count_distinct("token").alias("k"))
-        .filter(F.col("k") == len(uniq))
-        .select("doc_id")
-    )
-    first = postings.filter(F.col("token") == terms[0]).select("doc_id", "tf_idf")
-    return first.join(hits, "doc_id").select("doc_id", "tf_idf")
+    return _boolean(postings, [terms])
 
 
 def dnf_query(postings: DataFrame, conjuncts: list[list[str]]) -> DataFrame:
     """J2 — OR across conjuncts; first conjunct (parse order) wins on
     collision (set.union first-seen semantics, retrieve_query.py:138-140)."""
-    parts = []
-    for i, terms in enumerate(conjuncts):
-        if terms:
-            parts.append(and_query(postings, terms).withColumn("conj", F.lit(i)))
-    if not parts:
-        return postings.select("doc_id", "tf_idf").limit(0)
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    w = Window.partitionBy("doc_id").orderBy("conj")
-    return (
-        u.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "tf_idf")
-    )
+    return _boolean(postings, conjuncts)
 
 
 def not_query(
@@ -90,18 +97,9 @@ def not_query(
     """Boolean AND-NOT (IIR ch. 1 `x AND NOT y`, absent from the
     reference's OR-of-ANDs grammar — rebuild-only): docs containing ALL
     `terms` and NONE of `exclude`; score = first term's tf_idf
-    (and_query J1 semantics).
-
-    Scale: both sides are token-IN-pruned index scans (pushed to the
-    token-sorted postings sink, S4/T4) — the exclusion side is a
-    doc_id anti-join, never a corpus scan; no new shuffle class beyond
-    and_query's groupBy."""
-    base = and_query(postings, terms)
-    ex = list(dict.fromkeys(t.lower() for t in exclude))
-    if not ex:
-        return base
-    exdocs = postings.filter(F.col("token").isin(ex)).select("doc_id")
-    return base.join(exdocs, "doc_id", "left_anti")
+    (and_query J1 semantics). The exclusion terms ride in the same
+    token-IN scan as presence columns that must be null — no anti-join."""
+    return _boolean(postings, [terms], tuple(t.lower() for t in exclude))
 
 
 def rank_topk(results: DataFrame, k: int = MAX_LINKS_SHOWN) -> DataFrame:
@@ -164,17 +162,13 @@ def facet_counts(
     (the "narrow your search" sidebar every search UI renders next to
     the result list).
 
-    Scale shape: the match set comes from the same count-distinct==k
-    conjunct plan as dnf_query (token-IN pruned scan, no per-term
-    joins); facet attributes LEFT-SEMI join to the match set (semi
-    encodes that match membership, not match multiplicity, is what
-    counts — dnf_query output is distinct, but the plan no longer
-    relies on it) — at web scale the match set is the small side of
-    that join. Each matched row then explodes to |facet_cols| (facet,
-    value) pairs and ONE map-side-combinable count aggregate produces
-    every facet's histogram — the dnf lineage is evaluated once, not
-    once per facet, with no cache/persist needed. Counts are exact
-    ints."""
+    Scale shape: the match set is dnf_query's one-pass plan; facet
+    attributes LEFT-SEMI join to it (membership, not multiplicity,
+    counts; at web scale the match set is the small side). Each matched
+    row explodes to |facet_cols| (facet, value) pairs and ONE
+    map-side-combinable count aggregate produces every facet's
+    histogram — the match set is evaluated once, not once per facet,
+    with no cache/persist. Counts are exact ints."""
     matched = dnf_query(postings, conjuncts).select(id_col)
     pairs = F.explode(
         F.array(

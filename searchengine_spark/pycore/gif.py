@@ -170,6 +170,8 @@ def decode_gif(data: bytes) -> np.ndarray:
             canvas[:, :, :3] = gct[bg_index]
             if channels == 4:
                 canvas[:, :, 3] = 255
+        if top >= sh or left >= sw:
+            raise ValueError("GIF: frame outside logical screen")
         fi = np.clip(frame, 0, len(ct) - 1)
         rgb = ct[fi]
         y0, y1 = top, min(top + h, sh)

@@ -6,6 +6,8 @@ multimodal.decode_image for `image/gif` payloads.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -73,6 +75,18 @@ def test_truncated_stream_raises():
     raw = encode_gif(idx, pal)
     with pytest.raises(ValueError):
         decode_gif(raw[: len(raw) // 2])
+
+
+@pytest.mark.parametrize("field", [1, 3])  # descriptor left, top
+def test_frame_outside_logical_screen_raises(field):
+    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
+    idx = _RNG.integers(0, 2, (4, 5), dtype=np.uint8)
+    raw = bytearray(encode_gif(idx, pal))
+    desc = 6 + 7 + 3 * 4  # header + LSD + GCT (padded to 4 colors)
+    assert raw[desc] == 0x2C
+    struct.pack_into("<H", raw, desc + field, 5 if field == 1 else 4)
+    with pytest.raises(ValueError, match="frame outside logical screen"):
+        decode_gif(bytes(raw))
 
 
 def test_decode_image_dispatches_gif():

@@ -8,6 +8,7 @@ import io
 import os
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import tfidf as TF
@@ -35,6 +36,29 @@ def test_prefix_search_range_pushdown_on_sorted_index(spark, sf_dir, tmp_path):
     ) or "GreaterThanOrEqual(token" in plan
     assert "LessThan(token" in plan
     assert q.count() > 0
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["spark", "spark AND window OR dup", "spark AND window OR dup OR fast AND the"],
+)
+def test_search_is_one_scan_one_exchange(spark, sf_dir, tmp_path, query):
+    """Any number of conjuncts: one postings scan, one exchange (the
+    groupBy(doc_id)), no join and no window in the executed plan."""
+    from searchengine_spark.operators.query import search
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    path = str(tmp_path / "sorted_index_q")
+    TF.write_sorted_index(TF.build_postings(docs), path)
+    q = search(spark.read.parquet(path), query)
+    assert q.collect()
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("Exchange") == 1
+    assert final.count("FileScan parquet") == 1
+    assert "Window" not in final
+    assert "Join" not in final
 
 
 def test_percolate_registry_is_broadcast(spark, sf_dir):

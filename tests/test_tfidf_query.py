@@ -6,6 +6,8 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -212,3 +214,78 @@ def test_not_query_excludes_and_keeps_score(postings):
     assert same == base == {0, 2}
     # excluding a term present in every match -> empty result
     assert not_query(postings, ["cat"], ["cat"]).count() == 0
+
+
+# ---- one-pass Boolean plan vs a pure-Python first-conjunct-wins reference
+
+_VOCAB = ["a", "b", "c", "d"]
+_QTERM = st.sampled_from(_VOCAB + ["zz"])  # "zz" is never indexed
+_POSTINGS = st.dictionaries(
+    st.tuples(st.integers(0, 5), st.sampled_from(_VOCAB)),
+    st.sampled_from([None, 0.25, 0.5, 1.0, 2.0]),  # a null score is present
+    max_size=16,
+)
+
+
+def _ref_boolean(rows, conjuncts, exclude=()):
+    """{doc_id: tf_idf}: a doc matches a conjunct when it has a
+    (doc_id, token) row for every term and none for an excluded term;
+    the first matching conjunct in parse order scores it with its
+    first term's tf_idf. A row with a null doc_id never matches."""
+    out = {}
+    for terms in conjuncts:
+        if not terms:
+            continue
+        for d in sorted({d for d, _ in rows if d is not None}):
+            if (d not in out and all((d, t) in rows for t in terms)
+                    and not any((d, t) in rows for t in exclude)):
+                out[d] = rows[(d, terms[0])]
+    return out
+
+
+def _as_dict(df):
+    got = df.collect()
+    res = {r["doc_id"]: r["tf_idf"] for r in got}
+    assert len(res) == len(got)  # one row per doc
+    assert df.columns == ["doc_id", "tf_idf"]
+    return res
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=_POSTINGS,
+    conjuncts=st.lists(st.lists(_QTERM, max_size=3), max_size=3),
+    exclude=st.lists(_QTERM, max_size=2),
+)
+# duplicate terms
+@example(rows={(0, "a"): 1.0, (0, "b"): 2.0, (1, "a"): 0.5},
+         conjuncts=[["a", "a", "b"], ["b", "b"]], exclude=[])
+# empty conjuncts are skipped
+@example(rows={(0, "a"): 1.0, (1, "b"): 0.5}, conjuncts=[[], ["a"], []],
+         exclude=[])
+# out-of-vocabulary terms
+@example(rows={(0, "a"): 1.0, (1, "b"): 0.5},
+         conjuncts=[["zz"], ["a", "zz", "A"], ["b"]], exclude=["zz"])
+# all-empty query
+@example(rows={(0, "a"): 1.0}, conjuncts=[[], []], exclude=[])
+@example(rows={(0, "a"): 1.0}, conjuncts=[], exclude=["a"])
+# a later conjunct with a lower score does not win
+@example(rows={(0, "a"): 2.0, (0, "b"): 0.25, (1, "b"): 0.5},
+         conjuncts=[["a"], ["b"]], exclude=[])
+# an excluded term in a matching doc; a null score still counts as present
+@example(rows={(0, "a"): 1.0, (0, "c"): 0.5, (1, "a"): 0.25, (2, "a"): None},
+         conjuncts=[["a"]], exclude=["c"])
+# a row without a doc_id never matches
+@example(rows={(None, "a"): 0.5, (0, "a"): 1.0}, conjuncts=[["a"]], exclude=[])
+def test_boolean_queries_match_reference(spark, rows, conjuncts, exclude):
+    p = spark.createDataFrame(
+        [(d, t, s) for (d, t), s in rows.items()],
+        "doc_id long, token string, tf_idf double",
+    )
+    first = conjuncts[0] if conjuncts else []
+    assert _as_dict(dnf_query(p, conjuncts)) == _ref_boolean(rows, conjuncts)
+    assert _as_dict(and_query(p, first)) == _ref_boolean(rows, [first])
+    assert _as_dict(not_query(p, first, exclude)) == _ref_boolean(
+        rows, [first], exclude
+    )

@@ -80,6 +80,18 @@ def _norm(rows, cols, getter):
     return sorted(out)
 
 
+def _arrow_rows(tbl, duck_types) -> list[tuple]:
+    """Rows of a DuckDB Arrow result with the Python values fetchall()
+    gives: Arrow carries HUGEINT as decimal128(38,0), fetchall as int."""
+    cols = []
+    for col, t in zip(tbl.columns, duck_types):
+        vals = col.to_pylist()
+        if str(t) == "HUGEINT":
+            vals = [None if v is None else int(v) for v in vals]
+        cols.append(vals)
+    return list(zip(*cols))
+
+
 def _spark_type_ok(spark_t: str, arrow_t: str) -> bool:
     if spark_t.startswith("timestamp"):
         return arrow_t.startswith("timestamp")
@@ -119,10 +131,11 @@ def run_audit(spark, sf_dir, only=None, log=print):
             scols = sdf.columns
             stypes = {f.name: f.dataType.simpleString() for f in sdf.schema}
             srows = sdf.collect()
-            tbl = con.execute(oracles[name]).arrow()
+            rel = con.sql(oracles[name])
+            tbl = rel.arrow()
             ocols = list(tbl.column_names)
             otypes = {c: str(tbl.schema.field(c).type) for c in ocols}
-            orows = con.execute(oracles[name]).fetchall()
+            orows = _arrow_rows(tbl, rel.types)
         except Exception as e:  # noqa: BLE001
             log(f"{name:24s} ERROR {type(e).__name__}: {e}")
             fails.append(name)
