@@ -3253,7 +3253,8 @@ sel1 AS (SELECT doc_id FROM pick1)"""
         parts.append(
             f""",
 cand{i} AS (
-  SELECT p.doc_id, {lam!r} * p.sc - {c1!r} * coalesce(mx.m, 0.0e0) AS ms
+  SELECT p.doc_id,
+         {lam!r} * p.sc - {c1!r} * greatest(coalesce(mx.m, 0.0e0), 0.0e0) AS ms
   FROM page p
   LEFT JOIN (
     SELECT da AS doc_id, max(c) AS m FROM cosp

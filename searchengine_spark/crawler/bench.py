@@ -63,7 +63,6 @@ def run_fixed_crawl(
     timed_from_round: int = 1,
     pages_path: str | None = None,
     codegen: bool = True,
-    cfg_overrides: dict | None = None,
 ) -> tuple[float, int]:
     """Run `rounds` frontier rounds; returns (wall_sec, urls_fetched)
     for the TIMED window (rounds ≥ timed_from_round). Corpus generation,
@@ -81,8 +80,6 @@ def run_fixed_crawl(
     cfg = bench_config(seeds, n_partitions, codegen=codegen)
     if max_per_host is not None:
         cfg.max_per_host_per_round = max_per_host
-    for k, v in (cfg_overrides or {}).items():  # A/B experiment hook
-        setattr(cfg, k, v)
     # shuffle partitions sized to the crawl's explicit partitioning —
     # tiny-batch stages must not fan out to one task per machine core
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))

@@ -4,6 +4,14 @@ The reference reads an ini file (user agent, thread count, save file,
 seed urls, politeness ``time_delay``); the rebuild carries the same knobs
 as a dataclass plus the distributed-execution knobs the north rule adds
 (salts, partitions, bloom sizing, virtual-clock round duration).
+
+The round loop itself has one execution path (frontier.run_round): AQE
+and constraint propagation are always off inside a round, hot
+intermediates are always lazy localCheckpoints, and their prefetch
+counts are always submitted as they are built. Three in-round knobs
+remain: ``codegen_in_round`` and ``light_metrics`` (the bench sets both
+differently from the default) and ``prefetch_max_queued`` (the
+giant-round prefetch cutoff).
 """
 
 from __future__ import annotations
@@ -84,27 +92,6 @@ class CrawlConfig:
     # but no longer fast).
     bloom_target_bits_per_key: float = 10.0
 
-    # ---- AQE inside the round loop (default OFF): every AQE exchange
-    # materialization is its own driver-scheduled job — measured 110
-    # jobs/round vs 19 without, 35-45% of round wall at bench scale —
-    # and the round's shuffles are already explicitly partitioned,
-    # salted and size-adaptively broadcast, so AQE's residual value is
-    # partition coalescing. Flip on for deployments with wildly
-    # varying round sizes where runtime coalescing pays for its jobs.
-    aqe_in_round: bool = False
-
-    # ---- Catalyst constraint propagation inside the round loop
-    # (default OFF): the round's plans are join/window/union-deep, and
-    # constraint inference is quadratic-ish in predicate count per
-    # operator — pure DRIVER-serial Catalyst time, the exact fixed cost
-    # that caps N→4N scaling. Measured (r4, same corpus + seeds): 16k
-    # heavy-body pages at local[8], steady-state window 285.7s → 213.1s
-    # (+34% throughput); 2k-page light bench flat-to-better. Disabling
-    # only skips inferred-filter optimizations, never changes results
-    # (crawl parity suite is the proof). Scoped to the round, restored
-    # after.
-    constraints_in_round: bool = False
-
     # ---- whole-stage codegen inside the round loop (default ON —
     # Spark's default): per-round literals (round_added/round_fetched
     # columns, frontier_score) change the generated source every round,
@@ -117,49 +104,6 @@ class CrawlConfig:
     # light-body bench workload flips it off explicitly.
     codegen_in_round: bool = True
 
-    # ---- leaf-plan checkpoints inside the round (default ON): the
-    # round's hot intermediates (batch, page_stage, fpdf, flagged,
-    # new_urls, frontier_next) are lineage-truncated with
-    # localCheckpoint(eager=False) instead of persist(). Each is
-    # referenced 2-6× downstream, and with plain persist() every
-    # downstream Dataset op re-ANALYZES the full accumulated round tree
-    # (caching swaps in InMemoryRelation only at planning time) — pure
-    # driver-serial Catalyst cost measured at ~6.7 s/round at bench
-    # scale, the largest single term in the fixed cost that caps N→4N
-    # scaling. With leaves, downstream ops analyze a LogicalRDD leaf.
-    # Semantics are unchanged (parity suite + an explicit A/B test);
-    # the two deliberate trade-offs: a leaf drops static size stats
-    # (irrelevant here — every broadcast on the round path is an
-    # explicit hint) and drops outputPartitioning (irrelevant here —
-    # each downstream join/agg keys differently and shuffles either
-    # way). Blocks are unpersisted explicitly at round end, exactly
-    # like the persist() path.
-    leaf_plans_in_round: bool = True
-
-    # ---- async hot-intermediate prefetch (default ON): as each hot
-    # intermediate is checkpointed/persisted, a count() is submitted on
-    # a worker thread so EXECUTORS materialize it while the DRIVER is
-    # still building the downstream plans — overlapping the round's two
-    # serial components (Catalyst plan construction vs cluster work)
-    # instead of paying them back-to-back. Downstream jobs reuse the
-    # already-persisted blocks (block-manager locking single-computes
-    # under concurrency), so no work is duplicated; the only cost is
-    # one near-free count job per intermediate (AQE is off in-round, so
-    # a count is a single driver round-trip).
-    prefetch_in_round: bool = True
-
-    # ---- batch the prefetch submissions (default ON): queue every
-    # hot-intermediate count during plan building and submit them all
-    # at once when planning finishes, instead of submitting inside
-    # _hot(). On a wide cluster the giant rounds' concurrent prefetch
-    # jobs peg every core, CPU-starving the driver's own Catalyst
-    # analysis (measured: the plan-building marks inflate ~10x in the
-    # giant round when submissions interleave with planning); deferring
-    # the submissions keeps planning on a quiet JVM and the executors
-    # then materialize the same chain at full width. Only consulted
-    # when prefetch_in_round is on.
-    batch_prefetch: bool = True
-
     # ---- giant-round prefetch cutoff: when the carried QUEUED count
     # exceeds this, the round skips prefetch submissions entirely. The
     # prefetch's value is filling idle executors while the driver
@@ -167,9 +111,9 @@ class CrawlConfig:
     # steady state) there is no idle to fill — the extra jobs race the
     # frontier write for the same lazy localCheckpoints and
     # double-compute them (measured at 64k pages / 32 cores: 70 s/round
-    # without prefetch vs 82 s batched / 105 s interleaved with it).
-    # Small driver-bound rounds (the ramp, the 2k-page bench) keep the
-    # overlap win. None = never skip.
+    # without prefetch vs 105 s with it). Small driver-bound rounds
+    # (the ramp, the 2k-page bench) keep the overlap win. None = never
+    # skip.
     prefetch_max_queued: int | None = 16384
 
     # ---- per-round metrics: full (counts per stage) or light (only the

@@ -213,33 +213,41 @@ def run_round(
     """Execute one frontier round; returns the number of QUEUED urls
     remaining after the round (0 ⇒ crawl complete, ST1 termination).
 
-    Runs with AQE per cfg.aqe_in_round (default OFF for the round loop):
-    every AQE exchange materialization is a separate driver-scheduled
-    job, and a round has ~15 shuffles across ~7 concurrent actions —
-    measured 110 jobs/round with AQE vs 19 without, 35-45% of round
-    wall. The round's shuffles are already explicitly partitioned and
-    salted (two-phase quota, (host,salt) repartitions, size-adaptive
-    bloom broadcast), so AQE's residual value here is partition
-    coalescing — not worth ~90 driver-serial scheduling round-trips per
-    round, which is precisely the fixed cost that caps N→4N scaling.
-    The toggle is scoped to the round and restored after, so non-crawl
-    queries on the same session keep the session default (AQE on).
+    There is one execution path. The round's hot intermediates (batch,
+    page_stage, fpdf, flagged, new_urls, frontier_next) are lazy
+    localCheckpoints, so the ~100 downstream Dataset ops analyze a
+    LogicalRDD leaf instead of re-analyzing the whole round tree. A leaf
+    drops static size stats and outputPartitioning; neither matters
+    here, since every broadcast on the round path is an explicit hint
+    and each downstream join/agg keys differently. As each of the first
+    four is built, a count of its leaf RDD is submitted to a worker
+    thread, so executors materialize it while the driver keeps
+    planning; rounds whose carried QUEUED count exceeds
+    CrawlConfig.prefetch_max_queued skip those counts.
 
-    spark.sql.shuffle.partitions is likewise scoped to the round and
-    sized with the same batch-proportional rule as the explicit
-    repartitions (CrawlConfig.rows_per_partition_target) — the quota
-    windows and gate joins shuffle at this width, and with AQE off
-    nothing else coalesces a ramp round's near-empty partitions."""
+    Session confs are scoped to the round: set here, restored in the
+    finally even when the round raises, so non-crawl queries on the same
+    session keep their settings.
+      * AQE is off: the round's shuffles are already explicitly
+        partitioned and salted, and every AQE exchange materialization
+        is its own driver-scheduled job.
+      * Constraint propagation is off: it only skips inferred-filter
+        optimizations (never changes results) and costs driver-serial
+        Catalyst time on the round's join/window/union-deep plans.
+      * Whole-stage codegen follows CrawlConfig.codegen_in_round.
+      * spark.sql.shuffle.partitions is sized with the same
+        batch-proportional rule as the explicit repartitions
+        (CrawlConfig.rows_per_partition_target) — with AQE off nothing
+        else coalesces a ramp round's near-empty partitions."""
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     shp_prev = spark.conf.get("spark.sql.shuffle.partitions")
     cp_prev = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
     cg_prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     cgf_prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    if not cfg.aqe_in_round:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if not cfg.constraints_in_round:
-        # driver-serial Catalyst cost, not correctness — see CrawlConfig
-        spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    # measured: AQE on costs 110 vs 19 jobs/round; constraint
+    # propagation on costs 285.7 vs 213.1 s at 16k pages on local[8]
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     if not cfg.codegen_in_round:
         # light-round compile-tax escape hatch — see CrawlConfig
         spark.conf.set("spark.sql.codegen.wholeStage", "false")
@@ -270,12 +278,9 @@ def run_round(
         )
     finally:
         pool.shutdown(wait=True, cancel_futures=True)
-        for df, jrdd in caches:
+        for _src, jrdd in caches:
             try:
-                if jrdd is None:
-                    df.unpersist()
-                else:
-                    jrdd.unpersist(False)
+                jrdd.unpersist(False)
             except Exception:
                 pass  # best-effort release on an already-failing round
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
@@ -311,58 +316,37 @@ def _run_round_body(
             _t[0] = now
 
     # _round_caches / _stage_pool are owned by run_round (released in
-    # its finally even on a failing round); the body only registers the
-    # hot intermediates (cfg.leaf_plans_in_round lazy localCheckpoint
-    # truncates lineage so the ~100 downstream Dataset ops analyze a
-    # leaf instead of the whole round tree — the measured dominant
-    # driver-serial fixed cost) and submits prefetch/stage jobs.
-    if cfg.leaf_plans_in_round:
-        _quiet_unpersist_warning(spark)
+    # its finally even on a failing round); the body registers the hot
+    # intermediates and submits prefetch/stage jobs.
+    _quiet_unpersist_warning(spark)
 
-    _pending_prefetch: list = []
     # giant-round cutoff (cfg.prefetch_max_queued): executor-bound
     # rounds skip prefetch — nothing is idle during planning, and the
     # extra jobs double-compute the lazy checkpoints against the
     # frontier write
-    _do_prefetch = cfg.prefetch_in_round and (
+    _do_prefetch = (
         cfg.prefetch_max_queued is None
         or prev_queued is None
         or prev_queued <= cfg.prefetch_max_queued
     )
 
-    def _submit_prefetch(action) -> None:
-        # cfg.batch_prefetch: queue during planning, flush after — the
-        # giant rounds' concurrent prefetch jobs otherwise CPU-starve
-        # the driver's own Catalyst analysis on a saturated box
-        if cfg.batch_prefetch:
-            _pending_prefetch.append(action)
-        else:
-            _stage_pool.submit(action)
-
-    def _flush_prefetch() -> None:
-        for action in _pending_prefetch:
-            _stage_pool.submit(action)
-        _pending_prefetch.clear()
-
     def _hot(df: DataFrame, warm: bool = False) -> DataFrame:
-        if not cfg.leaf_plans_in_round:
-            df = df.persist()
-            _round_caches.append((df, None))
-            if warm and _do_prefetch:
-                _submit_prefetch(df.count)
-            return df
         out = df.localCheckpoint(eager=False)
         jrdd = out._jdf.queryExecution().analyzed().rdd()
-        _round_caches.append((out, jrdd))
-        # async prefetch (cfg.prefetch_in_round): executors materialize
-        # this intermediate while the driver keeps building plans; a
-        # failure here is ignored — the frontier write recomputes the
-        # same lineage and surfaces the real error. The action is a raw
-        # RDD count on the leaf (NOT Dataset.count): no throwaway SQL
-        # plan, one stage, and no orphaned SQLMetrics accumulators for
-        # late task-end events to trip over after the Dataset is GC'd.
+        # The source DataFrame is registered too, so it stays referenced
+        # until the round ends: once the checkpoint's first job truncates
+        # lineage, the source plan (and its SQLMetric accumulators) is
+        # otherwise only weakly held, and a concurrent job still
+        # computing the same leaf reports into garbage-collected
+        # accumulators (DAGScheduler "Failed to update accumulator").
+        _round_caches.append((df, jrdd))
+        # async prefetch: executors materialize this intermediate while
+        # the driver keeps building plans; a failure here is ignored —
+        # the frontier write recomputes the same lineage and surfaces the
+        # real error. The action is a raw RDD count on the leaf (NOT
+        # Dataset.count): no throwaway SQL plan, one stage.
         if warm and _do_prefetch:
-            _submit_prefetch(jrdd.count)
+            _stage_pool.submit(jrdd.count)
         return out
 
     # batch-proportional partition width for the round's light
@@ -570,7 +554,6 @@ def _run_round_body(
     # append-mode snapshots: each round writes only its DELTA (Iceberg
     # append-files shape — a round is O(new rows), never O(table))
     _mark("plans")
-    _flush_prefetch()  # planning done — executors get the queued chain
     if profile:
         batch.count()
         _mark("mat:batch")

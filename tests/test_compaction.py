@@ -6,7 +6,8 @@ crawl stays O(cadence) in snapshot fan-in and bloom blobs-per-segment —
 per-round cost must not grow with crawl age. These tests assert:
 
   * output parity: a compacted crawl ≡ the same crawl with compaction
-    off (crawl order, url_seen set, extracted text);
+    off ≡ the single-node oracle (crawl order, url_seen set, extracted
+    text) — the default round path crossing compaction boundaries;
   * boundedness: visible snapshots per append table and bloom blobs per
     segment stay ≤ the cadence across ≥3 compaction cycles;
   * resume ≡ uninterrupted across a compaction boundary (ST4);
@@ -25,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.crawler import frontier as FR
+from searchengine_spark.crawler import oracle as O
 from searchengine_spark.crawler import urlseen
 from searchengine_spark.crawler.config import CrawlConfig
 from searchengine_spark.crawler.synth import ALLOWED_HOST_RE, gen_corpus, pages_df
@@ -80,6 +82,19 @@ def test_compacted_crawl_output_parity(compacted, uncompacted):
         r["canon_url"]: r["text"] for r in uncompacted.read("extracted").collect()
     }
     assert ext_a == ext_b
+
+
+def test_compacted_crawl_matches_oracle(compacted, cfgs):
+    rows, robots_rows, _ = gen_corpus(N_PAGES, SEED)
+    pages, robots = O.corpus_dicts(rows, robots_rows)
+    want = O.crawl_oracle(cfgs[0], pages, robots, max_rounds=MAX_ROUNDS)
+    assert FR.crawl_order(compacted) == O.crawl_order_oracle(want)
+    seen = {r["canon_url"] for r in compacted.read("url_seen").collect()}
+    assert seen == want.seen
+    ext = {
+        r["canon_url"]: r["text"] for r in compacted.read("extracted").collect()
+    }
+    assert ext == want.extracted
 
 
 def _n_snapshots(io, table):

@@ -125,3 +125,56 @@ def test_latest_capture_wins(spark):
     pp1.unpersist(), pp3.unpersist()
     assert k1 == k3
     assert len(k3) == len(rows1)
+
+
+ROUND_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.constraintPropagation.enabled": "true",
+    "spark.sql.codegen.wholeStage": "true",
+    "spark.sql.shuffle.partitions": "7",
+}
+
+
+def test_run_round_scopes_session_confs(spark, corpus, tmp_path, monkeypatch):
+    """run_round turns AQE, constraint propagation and (per cfg) codegen
+    off and resizes shuffle partitions for the round only: every conf
+    is back to its session value after a round that commits AND after a
+    round that raises."""
+    from dataclasses import replace
+
+    from pyspark.errors import AnalysisException
+
+    from searchengine_spark.crawler import gates
+
+    cfg = replace(corpus[3], codegen_in_round=False)
+    pdf, rdf, _ = pages_df(spark, N_PAGES, SEED)
+    io = TableIO(spark, str(tmp_path / "confs"))
+    FR.init_crawl(spark, io, cfg, rdf)
+
+    inside = {}
+    j7 = gates.content_dup_flags
+
+    def spy(*a, **k):
+        inside.update({c: spark.conf.get(c) for c in ROUND_CONFS})
+        return j7(*a, **k)
+
+    monkeypatch.setattr(gates, "content_dup_flags", spy)
+    saved = {c: spark.conf.get(c) for c in ROUND_CONFS}
+    try:
+        for c, v in ROUND_CONFS.items():
+            spark.conf.set(c, v)
+        FR.run_round(spark, io, cfg, pdf, 1, prev_queued=1)
+        assert inside == {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.constraintPropagation.enabled": "false",
+            "spark.sql.codegen.wholeStage": "false",
+            "spark.sql.shuffle.partitions": "1",
+        }
+        assert {c: spark.conf.get(c) for c in ROUND_CONFS} == ROUND_CONFS
+        with pytest.raises(AnalysisException):  # pages without html
+            FR.run_round(spark, io, cfg, pdf.select("url"), 2, prev_queued=1)
+        assert {c: spark.conf.get(c) for c in ROUND_CONFS} == ROUND_CONFS
+        assert io.latest_round() == 1
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)

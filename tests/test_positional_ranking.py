@@ -351,6 +351,18 @@ def test_mmr_demotes_redundant_results_and_matches_pycore(spark):
     assert by_rank[1] != 2
 
 
+def test_mmr_negative_similarity_clamps_at_zero():
+    """max over S starts at 0: a candidate whose only cosine to the
+    selected set is negative is not rewarded for it — it scores λ·rel,
+    exactly as the mmr_rerank oracle's greatest(…, 0)."""
+    from searchengine_spark.pycore.mmr import cosine, mmr as py_mmr
+
+    vecs = {1: {"a": 1.0}, 2: {"a": -1.0}}
+    assert cosine(vecs[2], vecs[1]) == -1.0
+    got = py_mmr([(1, 10.0), (2, 4.0)], vecs, lam=0.3)
+    assert got == [(0, 1, 0.3 * 10.0), (1, 2, 0.3 * 4.0)]
+
+
 def test_best_passage_golden(spark):
     from searchengine_spark.operators.positional import (
         best_passage,

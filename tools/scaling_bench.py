@@ -74,18 +74,12 @@ def run_at(cores: int, n_pages: int, rounds: int, pages_path: str) -> tuple[floa
         extra_conf=_conf(cores),
     )
     try:
-        import json as _json
-
-        overrides = _json.loads(
-            os.environ.get("SPARK_GRAFT_CFG_OVERRIDES", "{}")
-        )  # A/B experiment hook: CrawlConfig field overrides
         return run_fixed_crawl(
             spark, n_pages, rounds,
             n_hosts=N_HOSTS,
             n_partitions=max(8, cores),
             timed_from_round=3,
             pages_path=pages_path,
-            cfg_overrides=overrides,
         )
     finally:
         spark.stop()
