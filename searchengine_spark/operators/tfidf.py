@@ -3,20 +3,32 @@
 Reference pipeline (index_construction.py __main__, traced SURVEY.md §3 E1):
 scan → extract → tokenize → per-doc tf → df → idf → tf·idf postings →
 token-sorted sink. The reference does this with Pool.map + driver-side
-dicts; here the whole thing is a lazy Catalyst plan:
+dicts; here the whole thing is a lazy Catalyst plan on ONE exchange:
 
-  documents → tokens (Column exprs, codegen) → explode →
-  groupBy(doc_id, token).count ÷ size(tokens)  [tf, A1]
-  → groupBy(token).count                        [df, A2]
-  → idf = ln(N/df)                              [A4, index_construction.py:193]
-  → join                                        [J3]
-  → tf_idf = tf·idf                             [A5]
+  documents → tokens (Column exprs, codegen) → explode_outer, token NOT NULL
+  → repartition(token)                          [the one exchange]
+  → groupBy(doc_id, token).count ÷ n_terms      [tf, A1; reuses it]
+  → count(*) over (partition by token)          [df, A2; reuses it]
+  → idf = ln(N/df), tf_idf = tf·idf             [A4, A5; same projection]
 
-Scale notes (100 TB): total-terms is computed as size(tokens) BEFORE the
-explode, so tf needs only the one (doc_id, token) shuffle; the idf side
-is a per-token aggregate joined back — broadcastable when the dictionary
-is small, shuffled-hash otherwise (AQE decides; both sides are already
-partitioned by token from the df agg, so the join reuses the exchange).
+N (A3) is one separate count job. Inside the plan it would be a cross
+join to a one-row count: over tf, that count does not reuse the token
+exchange and measured slower than the job; over the documents, it
+tokenizes every row a second time.
+
+Tokenize-once rule: the tokenizer regex is evaluated once per row only
+if no filter on `tokens` or `n_terms` sits between the Project that
+builds them and the generator. A plain `explode` gets an inferred
+`size(tokens) > 0` filter, and an `n_terms > 0` filter is pushed below
+the Project; either one re-evaluates the regex. So tf explodes with the
+outer generator (no inferred filter) and drops the null token it emits
+for an empty or null array — the same rows as P3's empty-doc drop
+(index_construction.py:130-131).
+
+Scale notes (100 TB): the exchange ships raw token occurrences (no
+map-side combine before it), and a head token's rows all land in one
+partition; total-terms is size(tokens) BEFORE the explode, so no
+per-doc aggregate is needed.
 
 Faithful quirks kept: tf is *relative* frequency count/total_terms
 (helpers.py:21-27); idf is ln(N/df), natural log, no smoothing
@@ -56,11 +68,14 @@ def doc_tokens(
 
 def term_frequencies(tokens_df: DataFrame) -> DataFrame:
     """A1 — (doc_id, token, tf) with tf = count/total_terms
-    (helpers.py:24-25). Empty-token docs are dropped (P3,
-    index_construction.py:130-131)."""
+    (helpers.py:24-25), hash-partitioned by token. Empty-token docs
+    yield no rows (P3, index_construction.py:130-131)."""
     return (
-        tokens_df.filter(F.col("n_terms") > 0)
-        .select("doc_id", "n_terms", F.explode("tokens").alias("token"))
+        tokens_df.select(
+            "doc_id", "n_terms", F.explode_outer("tokens").alias("token")
+        )
+        .filter(F.col("token").isNotNull())
+        .repartition("token")
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"), F.first("n_terms").alias("n_terms"))
         .select(
@@ -84,51 +99,33 @@ def idf_table(df_counts: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
+def _postings(tf: DataFrame, n_docs: int) -> DataFrame:
+    """(doc_id, token, tf, idf, tf_idf) — df as a window over the token
+    partitions, so a token-partitioned tf needs no exchange and no join."""
+    df = F.count("*").over(Window.partitionBy("token"))
+    return tf.select(
+        "doc_id", "token", "tf", F.log(F.lit(float(n_docs)) / df).alias("idf")
+    ).withColumn("tf_idf", F.col("tf") * F.col("idf"))
+
+
 def build_postings(
     documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     lemma_map: dict[str, str] | None = None,
-    broadcast_idf: bool = False,
 ) -> DataFrame:
-    """Full index: (doc_id, token, tf, idf, tf_idf).
-
-    broadcast_idf=True hints the idf dimension as broadcast (J3) — right
-    when the token dictionary fits in executors; default lets AQE pick
-    (the join reuses the token-hash exchange from the df aggregate).
-    """
+    """Full index: (doc_id, token, tf, idf, tf_idf)."""
     toks = doc_tokens(documents, id_col, text_col, lemma_map)
-    tf = term_frequencies(toks)
     n_docs = toks.filter(F.col("n_terms") > 0).count()  # A3
-    idf = idf_table(doc_frequencies(tf), n_docs)
-    if broadcast_idf:
-        idf = F.broadcast(idf)
-    return tf.join(idf, "token").select(
-        "doc_id",
-        "token",
-        "tf",
-        "idf",
-        (F.col("tf") * F.col("idf")).alias("tf_idf"),
-    )
+    return _postings(term_frequencies(toks), n_docs)
 
 
-def postings_from_tf(tf: DataFrame, broadcast_idf: bool = False) -> DataFrame:
-    """Index refresh from a MAINTAINED tf table: df/idf re-derive in one
-    aggregate pass over (doc_id, token, tf) — the tokenize stage (the
-    expensive one at corpus scale) is never re-run for unchanged docs.
-    n_docs = distinct doc ids in tf, ≡ A3's n_terms>0 count since empty
-    docs never enter tf."""
-    n_docs = tf.select("doc_id").distinct().count()
-    idf = idf_table(doc_frequencies(tf), n_docs)
-    if broadcast_idf:
-        idf = F.broadcast(idf)
-    return tf.join(idf, "token").select(
-        "doc_id",
-        "token",
-        "tf",
-        "idf",
-        (F.col("tf") * F.col("idf")).alias("tf_idf"),
-    )
+def postings_from_tf(tf: DataFrame) -> DataFrame:
+    """Index refresh from a MAINTAINED tf table: df/idf re-derive from
+    (doc_id, token, tf) — the tokenize stage (the expensive one at corpus
+    scale) is never re-run for unchanged docs. n_docs = distinct doc ids
+    in tf, ≡ A3's n_terms>0 count since empty docs never enter tf."""
+    return _postings(tf, tf.select("doc_id").distinct().count())
 
 
 def update_tf(

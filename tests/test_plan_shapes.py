@@ -194,3 +194,36 @@ def test_doc_keywords_window_partitioned_by_doc(spark, sf_dir):
     for line in plan.splitlines():
         if "partitionBy" in line.lower():
             assert "doc_id" in line
+
+
+def _executed(spark, df) -> str:
+    """The executed plan with AQE off, so the static exchanges show."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df.count()
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_tfidf_build_is_one_exchange_one_tokenize(spark, sf_dir, tmp_path):
+    """build_postings: one token exchange shared by tf and the df window,
+    no join, and the tokenizer regex evaluated once per row. df over tf
+    and a refresh from a stored tf add nothing beyond one exchange."""
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    plan = _executed(spark, TF.build_postings(docs))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("Exchange") == 1
+    assert "Join" not in plan
+    assert plan.count("regexp_extract_all") == 1
+
+    tf = TF.term_frequencies(TF.doc_tokens(docs))
+    plan = _executed(spark, TF.doc_frequencies(tf))
+    assert plan.count("Exchange") == 1
+
+    path = str(tmp_path / "tf")
+    tf.write.parquet(path)
+    plan = _executed(spark, TF.postings_from_tf(spark.read.parquet(path)))
+    assert plan.count("Exchange") == 1
+    assert "Join" not in plan

@@ -159,6 +159,68 @@ def test_update_tf_converges_to_rebuild(spark):
     assert not any(d == 2 for d, _ in got)  # deletion really deletes
 
 
+EDGE_DOCS = [
+    (1, "a b a"),  # repeated token
+    (2, ""),
+    (3, None),
+    (4, "b c"),
+    (5, "'''"),  # apostrophes only: no token
+    (6, "x" * 10001),  # its only token is over the 10,000-char bound
+    (7, "B b, d'x b"),
+]  # "b" is in every token-bearing doc: idf 0
+
+
+def _oracle_postings(docs):
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as E
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    rows = con.execute(E.oracle_sql()["postings"]).fetchall()
+    con.close()
+    return {(d, t): (tf, idf, s) for d, t, tf, idf, s in rows}
+
+
+def _rounded_postings(df):
+    return {
+        (r["doc_id"], r["token"]): (r["tf"], r["idf"], r["tf_idf"])
+        for r in df.select(
+            "doc_id", "token",
+            *[F.round(c, 9).alias(c) for c in ("tf", "idf", "tf_idf")],
+        ).collect()
+    }
+
+
+def test_postings_edge_cases_match_oracle(spark):
+    """Token-less docs (null, empty, apostrophes only, one over-long
+    token) get no postings and do not count in N; both write paths agree
+    with the DuckDB postings oracle."""
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(EDGE_DOCS, schema)
+    want = _oracle_postings(EDGE_DOCS)
+    assert {d for d, _ in want} == {1, 4, 7}
+
+    got = _rounded_postings(build_postings(docs))
+    assert got == want
+    assert got[(4, "c")][1] == round(math.log(3), 9)  # N = 3
+    b = {d: v for (d, t), v in got.items() if t == "b"}
+    assert set(b) == {1, 4, 7}
+    assert all(v[1] == 0.0 and v[2] == 0.0 for v in b.values())
+    assert got[(7, "b")][0] == 0.75
+
+    # a stale index of other texts, refreshed with every doc as changed
+    stale = spark.createDataFrame(
+        [(1, "q"), (2, "stale words"), (3, "b"), (8, "gone")], schema
+    )
+    tf = update_tf(
+        term_frequencies(doc_tokens(stale)),
+        docs.unionByName(spark.createDataFrame([(8, None)], schema)),
+    )
+    assert _rounded_postings(postings_from_tf(tf)) == want
+
+
 def test_postings_size_estimate(spark):
     from searchengine_spark.operators import tfidf as TF
 
