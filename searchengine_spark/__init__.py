@@ -22,3 +22,18 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# In Spark's Python workers on CPython < 3.13, stop every task from
+# re-reading pyspark.zip (see zipguard). Every round UDF's pickled
+# closure imports this package, so a reused worker pays at most its
+# first task. The driver and plain Python import nothing more here.
+if _sys.version_info < (3, 13) and getattr(
+    getattr(_sys.modules.get("pyspark.files"), "SparkFiles", None),
+    "_is_running_on_worker",
+    False,
+):
+    from searchengine_spark import zipguard as _zipguard
+
+    _zipguard.install()

@@ -62,6 +62,16 @@ METRICS_SCHEMA = (
     "round int, batch_size bigint, fetched_ok bigint, errors bigint, "
     "dup_pages bigint, candidates bigint, new_urls bigint, queued_remaining bigint"
 )
+# A round's metrics row is an inline VALUES table bound through named
+# parameter markers: it plans as a JVM LocalTableScan, so staging it
+# starts no Python worker task (createDataFrame ships a pickled Python
+# RDD) and, unlike select(lit(...)), inlines no round literal into
+# generated code.
+_METRICS_COLS = [c.split() for c in METRICS_SCHEMA.split(",")]
+_METRICS_ROW_SQL = "SELECT * FROM VALUES ({}) AS t({})".format(
+    ", ".join(f"CAST(:{n} AS {t})" for n, t in _METRICS_COLS),
+    ", ".join(f"`{n}`" for n, _ in _METRICS_COLS),
+)
 HOST_GRAPH_SCHEMA = "src_host string, dst_host string, n bigint, round_added int"
 TRAP_TEMPLATES_SCHEMA = (
     "host string, template string, n_urls bigint, n_distinct_urls bigint, "
@@ -727,7 +737,11 @@ def _run_round_body(
         )
         _mark("stage:trap_templates")
 
-    def _stage_metrics(row_df: DataFrame) -> None:
+    def _stage_metrics(*values) -> None:
+        row_df = spark.sql(
+            _METRICS_ROW_SQL,
+            args={n: v for (n, _), v in zip(_METRICS_COLS, values)},
+        )
         if do_compact:  # metrics history squashes with the other deltas
             prev = io.read("metrics", round_no - 1)
             io.stage(
@@ -756,10 +770,7 @@ def _run_round_body(
                 F.col("status") == "QUEUED"
             ).count()
         _stage_metrics(
-            spark.createDataFrame(
-                [(round_no, None, None, None, None, None, None, queued_remaining)],
-                METRICS_SCHEMA,
-            )
+            round_no, None, None, None, None, None, None, queued_remaining
         )
         _commit_and_prune()
         _mark("metrics+commit")
@@ -790,15 +801,8 @@ def _run_round_body(
     batch_size, fetched_ok = counts["batch_size"], counts["fetched_ok"]
     queued_remaining = counts["queued_remaining"]
     _stage_metrics(
-        spark.createDataFrame(
-            [
-                (
-                    round_no, batch_size, fetched_ok, batch_size - fetched_ok,
-                    counts["dup_pages"], None, counts["n_new"], queued_remaining,
-                )
-            ],
-            METRICS_SCHEMA,
-        )
+        round_no, batch_size, fetched_ok, batch_size - fetched_ok,
+        counts["dup_pages"], None, counts["n_new"], queued_remaining,
     )
     _commit_and_prune()
     _mark("metrics+commit")

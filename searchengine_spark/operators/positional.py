@@ -37,10 +37,14 @@ from searchengine_spark.operators.tfidf import doc_tokens
 def positional_postings(
     documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, pos, token) — posexplode of the normative token array."""
-    toks = doc_tokens(documents, id_col, text_col).filter(F.col("n_terms") > 0)
-    return toks.select(
-        "doc_id", F.posexplode("tokens").alias("pos", "token")
+    """(doc_id, pos, token) — posexplode of the normative token array.
+    Empty docs drop on the null token after posexplode_outer, not on an
+    n_terms filter, which Catalyst would push below the tokenizing
+    Project and so run the tokenizer regex twice per row."""
+    return (
+        doc_tokens(documents, id_col, text_col)
+        .select("doc_id", F.posexplode_outer("tokens").alias("pos", "token"))
+        .filter(F.col("token").isNotNull())
     )
 
 
@@ -227,8 +231,10 @@ def snippets(
     arrays; the document text itself is never shipped to the driver.
     """
     uniq = list(dict.fromkeys(t.lower() for t in terms))
-    toks = doc_tokens(documents, id_col, text_col).filter(F.col("n_terms") > 0)
-    pp = toks.select("doc_id", F.posexplode("tokens").alias("pos", "token"))
+    toks = doc_tokens(documents, id_col, text_col)
+    pp = toks.select(
+        "doc_id", F.posexplode_outer("tokens").alias("pos", "token")
+    ).filter(F.col("token").isNotNull())
     firsts = (
         pp.filter(F.col("token").isin(uniq))
         .groupBy("doc_id")
@@ -487,10 +493,12 @@ def rake_keywords(
     from pyspark.sql import Window
 
     stops = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    toks = doc_tokens(documents, id_col, text_col).filter(F.col("n_terms") > 0)
-    tp = toks.select(
-        "doc_id", F.posexplode("tokens").alias("pos", "token")
-    ).withColumn("is_stop", F.expr(f"token IN ({stops})"))
+    tp = (
+        doc_tokens(documents, id_col, text_col)
+        .select("doc_id", F.posexplode_outer("tokens").alias("pos", "token"))
+        .filter(F.col("token").isNotNull())
+        .withColumn("is_stop", F.expr(f"token IN ({stops})"))
+    )
     w = Window.partitionBy("doc_id").orderBy("pos")
     seg = (
         tp.withColumn("grp", F.sum(F.col("is_stop").cast("int")).over(w))

@@ -227,3 +227,90 @@ def test_tfidf_build_is_one_exchange_one_tokenize(spark, sf_dir, tmp_path):
     plan = _executed(spark, TF.postings_from_tf(spark.read.parquet(path)))
     assert plan.count("Exchange") == 1
     assert "Join" not in plan
+
+
+def test_positional_postings_tokenize_once(spark, sf_dir):
+    """posexplode_outer + a non-null token keeps the tokenizer regex in
+    one Project; an n_terms filter would be pushed below it and run the
+    regex a second time per row."""
+    from searchengine_spark.operators.positional import positional_postings
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    plan = _executed(spark, positional_postings(docs))
+    assert plan.count("regexp_extract_all") == 1
+
+
+# A 3-round crawl (150 synthetic pages, seed 42) with a compaction at
+# round 2, so the metrics delta is staged both alone and unioned with the
+# history. The rows are those the driver-side createDataFrame row wrote.
+METRICS_DTYPES = [
+    ("round", "int"), ("batch_size", "bigint"), ("fetched_ok", "bigint"),
+    ("errors", "bigint"), ("dup_pages", "bigint"), ("candidates", "bigint"),
+    ("new_urls", "bigint"), ("queued_remaining", "bigint"),
+]
+FULL_METRICS = [
+    (1, 3, 3, 0, 0, None, 15, 15),
+    (2, 15, 15, 0, 0, None, 108, 108),
+    (3, 37, 37, 0, 1, None, 24, 95),
+]
+LIGHT_METRICS = [(r[0], None, None, None, None, None, None, r[-1]) for r in FULL_METRICS]
+
+
+@pytest.fixture(scope="module")
+def metrics_crawls(spark, tmp_path_factory):
+    """{light_metrics: (io, executed plans of the staged metrics deltas)}"""
+    from searchengine_spark.crawler import frontier as FR
+    from searchengine_spark.crawler.config import CrawlConfig
+    from searchengine_spark.crawler.synth import (
+        ALLOWED_HOST_RE,
+        gen_corpus,
+        pages_df,
+    )
+    from searchengine_spark.crawler.tableio import TableIO
+
+    _, _, seeds = gen_corpus(150, 42)
+    stage = TableIO.stage
+    plans: list[str] = []
+
+    def spy(self, table, df, round_no, *a, **k):
+        if table == "metrics" and round_no > 0:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return stage(self, table, df, round_no, *a, **k)
+
+    out = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(TableIO, "stage", spy)
+        for light in (False, True):
+            cfg = CrawlConfig(
+                seeds=seeds, allowed_host_re=ALLOWED_HOST_RE,
+                compact_every=2, light_metrics=light,
+            )
+            pdf, rdf, _ = pages_df(spark, 150, 42)
+            io_ = TableIO(spark, str(tmp_path_factory.mktemp("metrics") / "wh"))
+            plans.clear()
+            FR.crawl(spark, io_, cfg, pdf, rdf, max_rounds=3)
+            out[light] = (io_, list(plans))
+    return out
+
+
+@pytest.mark.parametrize("light", [False, True])
+def test_metrics_delta_is_a_jvm_local_scan(metrics_crawls, light):
+    """The metrics row plans as a LocalTableScan: no pickled Python RDD
+    (so no Python worker task) and no Project of round literals (so no
+    per-round generated class)."""
+    _, plans = metrics_crawls[light]
+    assert len(plans) == 3
+    for plan in plans:
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+        assert "PythonRDD" not in plan
+        assert "Project" not in plan
+
+
+@pytest.mark.parametrize("light", [False, True])
+def test_metrics_table_rows_and_types(metrics_crawls, light):
+    io_, _ = metrics_crawls[light]
+    m = io_.read("metrics")
+    assert m.dtypes == METRICS_DTYPES
+    want = LIGHT_METRICS if light else FULL_METRICS
+    assert [tuple(r) for r in m.orderBy("round").collect()] == want
